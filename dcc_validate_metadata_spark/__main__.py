@@ -57,7 +57,6 @@ def cmd_validate(args) -> int:
         resume=not args.no_resume,
         with_stats=args.stats,
         drift_reference=drift_ref,
-        decode_rebalance=args.decode_rebalance,
     )
     verdicts = r.verdict_rows or []
     n_fail = sum(1 for v in verdicts if not v["pass"])
@@ -232,13 +231,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     v.add_argument("--no-resume", action="store_true")
     v.add_argument("--stats", action="store_true")
-    v.add_argument(
-        "--decode-rebalance", type=int, default=None, metavar="N",
-        help="hash-repartition the decode branch into N tasks before the "
-        "Arrow stage — spreads megapixel rows that cluster in "
-        "size-sorted storage layouts (costs a shuffle of the image "
-        "payload; unnecessary for randomly-laid-out tables)",
-    )
     v.add_argument(
         "--drift-reference", default=None,
         help='JSON partition ref, e.g. {"fmt": "jpeg"}',

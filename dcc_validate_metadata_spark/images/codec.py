@@ -19,8 +19,8 @@ This container has no image libraries (no PIL / cv2 / imageio), so:
 * ``webp`` is a REAL codec — lossless WebP (RIFF/VP8L per RFC 9649) in
   ``images/vp8l.py``: canonical prefix codes, LZ77 + color cache, and
   the full transform set. Lossless round-trip (PSNR infinite), encoded
-  streams carry the standard RIFF/WEBP container. Lossy VP8 intra
-  coding is NOT implemented (rejected with ``ValueError``).
+  streams carry the standard RIFF/WEBP container. Lossy WebP (``VP8 ``
+  key frames, RFC 6386 intra coding) decodes through ``images/vp8.py``.
 * The quantize-then-deflate ``FAKL`` container remains ONLY as the
   carrier for planted unknown-fmt rows (``bmp``) and as the
   lossy-error model in property tests; no real fmt maps to it anymore.

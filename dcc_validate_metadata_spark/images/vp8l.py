@@ -655,9 +655,9 @@ def _inverse_color_transform(
 
 
 def decode_webp(data: bytes) -> np.ndarray:
-    """Decode a lossless WebP (RIFF/VP8L) byte stream to (h, w, 3) uint8
-    RGB. Lossy ``VP8 `` payloads raise ``ValueError`` (no VP8 intra
-    decoder in this sandbox); the alpha channel is dropped."""
+    """Decode a WebP byte stream to (h, w, 3) uint8 RGB: lossless
+    ``VP8L`` payloads here, lossy ``VP8 `` key frames via
+    ``images/vp8.py``. The alpha channel is dropped."""
     try:
         return _decode_webp_inner(data)
     except (ValueError, IndexError, struct.error, OverflowError) as exc:

@@ -29,20 +29,17 @@ from pyspark.storagelevel import StorageLevel
 # ~16 bytes/row aggregated (key, n): 500k rows ≈ 10-20 MB broadcast
 DUP_BROADCAST_MAX_ROWS = 500_000
 
-# persisted frames awaiting release — dup tables from gated_dup_table,
-# plus other operators' bounded caches (join_api row-ids, component
-# labels) that share the release point. Long-lived sessions (streaming
-# foreachBatch, repeated run_validation) call release_dup_tables() after
-# consuming the plans, or the block manager would accumulate one cached
-# table per rule per batch forever.
+# persisted dup tables from gated_dup_table awaiting release. Long-lived
+# sessions (streaming foreachBatch, repeated run_validation) call
+# release_dup_tables() after consuming the plans, or the block manager
+# would accumulate one cached table per rule per batch forever.
 _PERSISTED_DUPS: list[DataFrame] = []
 
 
 def release_dup_tables() -> int:
-    """Unpersist every frame registered since the last release (dup
-    tables and other operators' bounded caches). Safe once the results
-    consuming them have been written/collected (re-use after release
-    just recomputes). Returns the number released."""
+    """Unpersist every dup table registered since the last release. Safe
+    once the results consuming them have been written/collected (re-use
+    after release just recomputes). Returns the number released."""
     n = 0
     while _PERSISTED_DUPS:
         _PERSISTED_DUPS.pop().unpersist()

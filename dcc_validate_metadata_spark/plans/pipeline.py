@@ -28,10 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import __version__
-from ..images.invariants import (
-    decode_check_violations,
-    fused_decode_violations,
-)
+from ..images.invariants import decode_check_violations
 from ..rules.model import Ruleset, default_image_ruleset
 from .manifest import Manifest
 
@@ -57,7 +54,6 @@ def build_violations(
     ontology: DataFrame | None = None,
     gt: DataFrame | None = None,
     psnr_min: float = 40.0,
-    decode_rebalance: int | None = None,
 ) -> DataFrame:
     """All violation families as ONE wide pass over the fact table plus an
     Arrow decode branch — lazy except the per-unique-rule dup-size probe
@@ -169,25 +165,14 @@ def build_violations(
 
     parts = [fused]
     if ruleset.udf_rules:
-        if gt is not None:
-            # ONE decode per row for structural + invariant checks: entropy
-            # decode dominates since jpeg became a real T.81 codec, and the
-            # split pair would decode (and scan `bytes`) twice
-            parts.append(
-                fused_decode_violations(
-                    df, gt, KEEP,
-                    missing_msg=binary_missing_msg, psnr_min=psnr_min,
-                    rebalance=decode_rebalance,
-                )
+        # ONE decode per row (and one `bytes` scan) for structural checks
+        # plus, when gt is given, the invariants: entropy decode dominates
+        parts.append(
+            decode_check_violations(
+                df, KEEP,
+                missing_msg=binary_missing_msg, gt=gt, psnr_min=psnr_min,
             )
-        else:
-            parts.append(
-                decode_check_violations(
-                    df, KEEP,
-                    missing_msg=binary_missing_msg,
-                    rebalance=decode_rebalance,
-                )
-            )
+        )
     return reduce(DataFrame.unionByName, parts)
 
 
@@ -256,7 +241,6 @@ def run_validation(
     resume: bool = True,
     with_stats: bool = False,
     drift_reference: dict | None = None,
-    decode_rebalance: int | None = None,
 ) -> ValidationResult:
     """Validate the image+caption table, writing violations + verdicts +
     manifest under ``out_dir``. With ``resume=True``, partitions recorded
@@ -352,10 +336,7 @@ def run_validation(
             verdict_rows=[],
         )
 
-    violations = build_violations(
-        df, ruleset=ruleset, ontology=ontology, gt=gt,
-        decode_rebalance=decode_rebalance,
-    )
+    violations = build_violations(df, ruleset=ruleset, ontology=ontology, gt=gt)
 
     # shuffle on (partition keys + salt), not the partition keys alone:
     # fmt is ~80% one codec, so keying the exchange on (fmt, bucket) would

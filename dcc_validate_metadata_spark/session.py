@@ -32,8 +32,10 @@ _BASE_CONF = {
     "spark.sql.parquet.compression.codec": "zstd",
     # Split sizing follows CPU cost, not just bytes: an Arrow decode stage
     # (real JPEG entropy decode) spends ~100x more CPU per input byte than
-    # a columnar scan, and scan-stage parallelism == input splits (no
-    # shuffle before mapInPandas). The 128m default leaves a 600k-row
+    # a columnar scan, and an Arrow stage with no shuffle before it runs
+    # one task per input split (transforms, audio/video decode; the
+    # validation decode branch instead hash-repartitions into
+    # shuffle.partitions tasks first). The 128m default leaves a 600k-row
     # 0.8 GB image table with ~6 splits — 6 of 32 cores decoding. 16m
     # keeps decode stages core-bound locally; a real cluster would keep
     # 128m for pure-columnar jobs and shrink it for decode-heavy ones.

@@ -7,6 +7,9 @@ Checked per query (where applicable):
 * **PushedFilters** — predicates reach the Parquet scan.
 * **ReadSchema pruning** — the scan reads only referenced columns; in
   particular NO query except the decode branch may read `bytes`.
+* **Decode rebalance** — in the validation pipeline, an
+  ``Exchange hashpartitioning(image_id, spark.sql.shuffle.partitions)``
+  feeds the Arrow decode stage, next to its single `bytes` scan.
 * **Broadcast joins** — KB-scale lookup sides broadcast (no shuffle of the
   fact side); large joins may sort-merge.
 * **WholeStageCodegen** — row-rule expressions stay inside codegen spans
@@ -69,6 +72,22 @@ def audit(name: str, plan: str) -> dict:
     }
 
 
+def decode_input_exchange(plan: str) -> str | None:
+    """Partitioning and shuffle origin of the Exchange directly under the
+    formatted plan's MapInPandas node, attribute ids stripped (e.g.
+    ``hashpartitioning(image_id, 4), REPARTITION_BY_NUM``), or None when
+    the Arrow stage is not fed by an Exchange."""
+    m = re.search(r"MapInPandas \(\d+\)\n[ :|]*\+- Exchange \((\d+)\)", plan)
+    if not m:
+        return None
+    args = re.search(
+        rf"^\({m.group(1)}\) Exchange\n(?:.+\n)*?Arguments: (\w+\([^)]*\), \w+)",
+        plan,
+        re.M,
+    )
+    return re.sub(r"#\d+", "", args.group(1)) if args else None
+
+
 def audit_all(spark, sf_dir: str):
     """Build every driver-pack query plan plus the fused pipeline and
     return (rows, problems, pipeline_note). Imported by
@@ -114,14 +133,26 @@ def audit_all(spark, sf_dir: str):
     n_bytes_scans = sum("bytes:binary" in s for s in schemas)
     n_bcast = len(re.findall("BroadcastHashJoin", plan))
     n_codegen = len(set(re.findall(r"\*\((\d+)\)", plan)))
+    decode_exchange = decode_input_exchange(plan)
     pipeline_note = (
         f"build_violations: {len(schemas)} scans, {n_bytes_scans} read `bytes` "
         f"(decode branch only), {n_bcast} broadcast joins, "
-        f"{n_codegen} codegen spans"
+        f"{n_codegen} codegen spans, decode input "
+        f"`Exchange {decode_exchange or 'MISSING'}`"
     )
     if n_bytes_scans != 1:
         problems.append(
             f"pipeline: expected exactly 1 bytes-reading scan, got {n_bytes_scans}"
+        )
+    # the decode branch is always rebalanced: an explicit-count image_id
+    # hash Exchange feeds the Arrow stage (a count-less repartition,
+    # REPARTITION_BY_COL, would let AQE coalesce it into a few tasks)
+    n_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    want = f"hashpartitioning(image_id, {n_shuffle}), REPARTITION_BY_NUM"
+    if decode_exchange != want:
+        problems.append(
+            f"pipeline: decode MapInPandas is not fed by Exchange {want}; "
+            f"got {decode_exchange}"
         )
     return rows, problems, pipeline_note
 

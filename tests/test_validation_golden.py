@@ -74,30 +74,36 @@ def test_run_validation_writes_and_resumes(spark, fixture_dir, tmp_path):
     assert r2.skipped_partitions == r1.verdicts.count()
 
 
-def test_fused_decode_equals_split_pair(spark, fixture_dir):
-    """fused_decode_violations (one decode per row) must emit exactly the
-    union of decode_check_violations + invariant_violations — the split
-    pair it replaced in the pipeline when gt is available."""
-    from dcc_validate_metadata_spark.images.invariants import (
-        decode_check_violations,
-        fused_decode_violations,
-        invariant_violations,
-    )
-    from dcc_validate_metadata_spark.plans.pipeline import KEEP
-    from dcc_validate_metadata_spark.rules import messages as M
+def test_gtless_violation_rows_exact(spark, fixture_dir):
+    """Without ground truth the decode kernel skips the gt join: structural
+    checks only, no caption/PSNR invariant rows. Expected rows are the
+    fixture golden recomputed over the stored rows with no gt record."""
+    import pyarrow.dataset as ds
 
-    gt = spark.read.parquet(str(fixture_dir / "image_caption_gt.parquet"))
-    df = load_image_table(spark, fixture_dir / "image_caption")
-    msg = M.msg_mandatory_missing("bytes")
-    fused = fused_decode_violations(df, gt, KEEP, missing_msg=msg).toPandas()
-    split = pd.concat(
-        [
-            decode_check_violations(df, KEEP, missing_msg=msg).toPandas(),
-            invariant_violations(df, gt, KEEP).toPandas(),
-        ],
-        ignore_index=True,
+    from dcc_validate_metadata_spark.sources.image_table import (
+        _expected_for_rows,
+        _Row,
+        ontology_terms_rows,
     )
-    g = _norm(fused, VIOL_COLS)
-    e = _norm(split, VIOL_COLS)
-    assert len(g) > 0
+
+    ontology = spark.read.parquet(str(fixture_dir / "ontology_terms.parquet"))
+    df = load_image_table(spark, fixture_dir / "image_caption")
+    got = build_violations(df, ontology=ontology).toPandas()
+
+    table = ds.dataset(
+        str(fixture_dir / "image_caption"), format="parquet", partitioning="hive"
+    ).to_table()
+    rows = [
+        _Row(
+            idx=i, image_id=r["image_id"], data=r["bytes"], w=r["w"],
+            h=r["h"], fmt=r["fmt"], caption=r["caption"], phash=r["phash"],
+            bucket=r["bucket"], gt_pixels=None, gt_caption=r["caption"],
+        )
+        for i, r in enumerate(table.to_pylist())
+    ]
+    labels = {label.lower() for _, label, _, _ in ontology_terms_rows()}
+    exp = _expected_for_rows(rows, labels)
+    g = _norm(got, VIOL_COLS)
+    e = _norm(exp, VIOL_COLS)
+    assert (e["field"] == "bytes").any()
     pd.testing.assert_frame_equal(g, e)
